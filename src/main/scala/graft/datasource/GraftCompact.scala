@@ -1,9 +1,10 @@
 package graft.datasource
 
+import graft.engine.BlockParquet
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.SparkSession
 
 /** Small-file compaction for a graft block store.
@@ -202,12 +203,7 @@ object GraftCompact {
 
     // 2. stream-copy block rows, re-stamping blockIdx across files
     if (fs.exists(inProgress)) fs.delete(inProgress, false)
-    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(BlockParquet.Schema, conf)
-    val writer = ExampleParquetWriter.builder(
-        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(inProgress, conf))
-      .withConf(conf)
-      .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
+    val writer = new BlockParquet.Writer(inProgress)
     var groups = 0
     try {
       var nextIdx = -1
@@ -229,7 +225,7 @@ object GraftCompact {
               nextIdx += 1
               groups += 1
             }
-            writer.write(BlockParquet.copyGroup(g, nextIdx))
+            writer.writeGroup(BlockParquet.copyGroup(g, nextIdx))
             g = reader.read()
           }
         } finally reader.close()
@@ -270,48 +266,5 @@ object GraftCompact {
     }
     fs.delete(journal, false)
     ()
-  }
-}
-
-/** shared parquet layout of EncodedBlock rows (the DSv2 writer's schema) */
-private[datasource] object BlockParquet {
-  import org.apache.parquet.schema.MessageTypeParser
-
-  val Schema: org.apache.parquet.schema.MessageType = MessageTypeParser.parseMessageType(
-    """message spark_schema {
-      |  optional binary colName (UTF8);
-      |  required int32 blockIdx;
-      |  required int32 codecId;
-      |  required int32 wrapId;
-      |  required int32 rowCount;
-      |  required int64 rawBytes;
-      |  required int64 encodedBytes;
-      |  optional binary minPrefix (UTF8);
-      |  optional binary maxPrefix (UTF8);
-      |  optional binary data;
-      |}""".stripMargin)
-
-  private val factory = new org.apache.parquet.example.data.simple.SimpleGroupFactory(Schema)
-
-  /** re-materialize a block row read from EITHER graft writer's layout
-    * under the shared schema, with a re-stamped blockIdx
-    */
-  def copyGroup(g: org.apache.parquet.example.data.Group, blockIdx: Int)
-      : org.apache.parquet.example.data.Group = {
-    val out = factory.newGroup()
-    out.append("colName", g.getString("colName", 0))
-    out.append("blockIdx", blockIdx)
-    out.append("codecId", g.getInteger("codecId", 0))
-    out.append("wrapId", g.getInteger("wrapId", 0))
-    out.append("rowCount", g.getInteger("rowCount", 0))
-    out.append("rawBytes", g.getLong("rawBytes", 0))
-    out.append("encodedBytes", g.getLong("encodedBytes", 0))
-    if (g.getFieldRepetitionCount("minPrefix") > 0)
-      out.append("minPrefix", g.getString("minPrefix", 0))
-    if (g.getFieldRepetitionCount("maxPrefix") > 0)
-      out.append("maxPrefix", g.getString("maxPrefix", 0))
-    out.append("data", org.apache.parquet.io.api.Binary.fromConstantByteArray(
-      g.getBinary("data", 0).getBytes))
-    out
   }
 }

@@ -647,7 +647,7 @@ object GraftAggReader {
     try {
       var g = reader.read()
       while (g != null) {
-        val values = BlockCodec.decodeBlock(GraftBlockRow.toBlock(g, partId, col))
+        val values = BlockCodec.decodeBlock(graft.engine.BlockParquet.fromGroup(g, partId, col))
         var i = 0
         while (i < values.length) {
           val v = values(i)
@@ -1077,39 +1077,6 @@ object GraftScan {
 final case class GraftInputPartition(partId: Int, files: Array[String])
     extends InputPartition
 
-/** one parquet block row (either graft writer's layout) → EncodedBlock */
-private[datasource] object GraftBlockRow {
-  def toBlock(g: org.apache.parquet.example.data.Group,
-              partId: Int, colName: String): EncodedBlock = {
-    def strOrNull(field: String): String =
-      if (g.getFieldRepetitionCount(field) == 0) null
-      else g.getString(field, 0)
-    EncodedBlock(
-      colName,
-      partId,
-      g.getInteger("blockIdx", 0),
-      g.getInteger("codecId", 0).toByte,
-      g.getInteger("wrapId", 0).toByte,
-      g.getInteger("rowCount", 0),
-      g.getLong("rawBytes", 0),
-      g.getLong("encodedBytes", 0),
-      strOrNull("minPrefix"),
-      strOrNull("maxPrefix"),
-      g.getBinary("data", 0).getBytes)
-  }
-
-  /** metadata-only materialization for count-shaped scans: the group was
-    * read under a projection WITHOUT `data` (and codec/prefix fields), so
-    * only identity + rowCount are real; nothing downstream decodes it
-    */
-  def toMetaBlock(g: org.apache.parquet.example.data.Group,
-                  partId: Int, colName: String): EncodedBlock =
-    EncodedBlock(colName, partId, g.getInteger("blockIdx", 0),
-      0.toByte, 0.toByte, g.getInteger("rowCount", 0),
-      0L, 0L, null, null, Array.emptyByteArray)
-}
-
-
 final case class GraftReaderFactory(requiredCols: Array[String], preds: Seq[GraftPred],
     limit: Int = -1)
     extends PartitionReaderFactory {
@@ -1190,8 +1157,8 @@ private[datasource] final class GraftGroupCursor(
       if (neededCols.contains(colName) ||
           (neededCols.isEmpty && colName == countCol))
         return (if (neededCols.isEmpty)
-          GraftBlockRow.toMetaBlock(g, partition.partId, colName)
-        else GraftBlockRow.toBlock(g, partition.partId, colName))
+          graft.engine.BlockParquet.metaFromGroup(g, partition.partId, colName)
+        else graft.engine.BlockParquet.fromGroup(g, partition.partId, colName))
       g = reader.read()
     }
     null

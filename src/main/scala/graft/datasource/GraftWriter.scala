@@ -1,18 +1,12 @@
 package graft.datasource
 
-import graft.codec.Codec
-import graft.engine.BlockCodec
-import graft.plan.CodecSelector
-import graft.stats.BlockStats
-import org.apache.hadoop.conf.Configuration
+import graft.engine.{BlockAccumulator, BlockParquet, Encoder}
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Write side of the `graft` DataSource V2: `df.write.format("graft")
   * .option("sortKeys", "k1,k2").save(store)` encodes string columns into
@@ -21,10 +15,12 @@ import org.apache.spark.sql.types.StructType
   * The encoder wants co-located, sorted keys — instead of shuffling
   * internally, the Write declares RequiresDistributionAndOrdering
   * (clustered on the first sort key, ordered by all of them) and SPARK
-  * plans the exchange + sort. Each task then streams its rows through the
-  * block encoder exactly like Encoder.PartitionEncoder: one block of raw
-  * values per column in memory, codec plan fixed by the first block's
-  * exact stats.
+  * plans the exchange + sort. Each task then feeds its rows to the
+  * engine's one block-encode kernel (graft.engine.BlockAccumulator, under
+  * EncodeConfig's default caps and zstd level) and writes the blocks with
+  * the one block-file writer (graft.engine.BlockParquet) — the same block
+  * bytes Encoder.encode and Checkpoint produce for the same sorted
+  * partition, published through the same staged rename.
   *
   * This is the one-shot export path; resumable encode with skew salting
   * and manifest lineage stays in graft.engine.Checkpoint.
@@ -44,6 +40,12 @@ class GraftWriteBuilder(path: String, info: LogicalWriteInfo)
       .getOrElse(Seq(schema.fieldNames.head))
     require(sortKeys.forall(schema.fieldNames.contains),
       s"sortKeys ${sortKeys.mkString(",")} must be columns of ${schema.fieldNames.mkString(",")}")
+    // the encoder reads every cell as UTF-8 bytes: any other type would be
+    // read from the row slot as if it were a string
+    require(schema.fields.forall(_.dataType == StringType),
+      "graft stores string columns only; cast these first: " +
+        schema.fields.filter(_.dataType != StringType)
+          .map(f => s"${f.name} ${f.dataType.simpleString}").mkString(", "))
 
     override def requiredDistribution(): Distribution =
       Distributions.clustered(Array(Expressions.identity(sortKeys.head)))
@@ -205,12 +207,12 @@ final class GraftStreamingWrite(path: String, schema: StructType, queryId: Strin
         }
       case _ =>
     }
-    val staging = new Path(blocks, s"_staging-q$qTag-e$epochId")
+    val staging = BlockParquet.stagingDir(blocks.toString, s"q$qTag-e$epochId")
     if (fs.exists(staging)) fs.delete(staging, true)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val staging = new Path(blocks, s"_staging-q$qTag-e$epochId")
+    val staging = BlockParquet.stagingDir(blocks.toString, s"q$qTag-e$epochId")
     val fs = staging.getFileSystem(hadoopConf)
     if (fs.exists(staging)) fs.delete(staging, true)
   }
@@ -224,8 +226,8 @@ final case class GraftStreamingWriterFactory(
     new GraftDataWriter(blocksDir, s"q$qTag-e$epochId", cols, partitionId, taskId)
 }
 
-/** Commit protocol (mirrors Checkpoint's temp-dir-then-rename manifest
-  * discipline): tasks write to `blocks/_staging-<writeId>/` (underscore
+/** Commit protocol (BlockParquet's staged rename, the one Checkpoint
+  * publishes through too): tasks write to `blocks/_staging-<writeId>/` (underscore
   * dirs are invisible to spark.read AND to the graft reader's partId=
   * listing), the driver's `commit()` renames exactly the files named in the
   * WriterCommitMessages into `blocks/partId=N/` and deletes the staging dir
@@ -247,7 +249,7 @@ class GraftBatchWrite(path: String, schema: StructType, truncate: Boolean,
   private lazy val blocks: Path = GraftDataSource.blocksDirForWrite(path)
   private lazy val storeRoot: Path = GraftDataSource.storeRootFor(path, blocks)
 
-  private def stagingDir = new Path(blocks, s"_staging-$writeId")
+  private def stagingDir = BlockParquet.stagingDir(blocks.toString, writeId)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     GraftWriterFactory(blocks.toString, writeId, schema.fieldNames)
@@ -300,11 +302,7 @@ class GraftBatchWrite(path: String, schema: StructType, truncate: Boolean,
         replaceDifferent = true)
     messages.foreach {
       case GraftCommit(pid, rows, file) if rows > 0 && file != null =>
-        val dest = new Path(blocks, s"partId=$pid")
-        fs.mkdirs(dest)
-        val src = new Path(file)
-        if (!fs.rename(src, new Path(dest, src.getName)))
-          throw new java.io.IOException(s"commit rename failed: $src -> $dest")
+        BlockParquet.publish(fs, blocks, pid, file)
       case _ =>
     }
     if (fs.exists(stagingDir)) fs.delete(stagingDir, true)
@@ -330,8 +328,8 @@ final case class GraftWriterFactory(blocksDir: String, writeId: String, cols: Ar
 final case class GraftCommit(partitionId: Int, rows: Long, stagedFile: String)
     extends WriterCommitMessage
 
-/** Streams one shuffled+sorted partition into encoded blocks, written as
-  * one parquet file of EncodedBlock rows under blocks/partId=<pid>/.
+/** Streams one shuffled+sorted partition through the engine's
+  * BlockAccumulator into one block file under blocks/_staging-<writeId>/.
   * Bounded memory: one block of raw values per column at a time.
   */
 final class GraftDataWriter(
@@ -339,115 +337,35 @@ final class GraftDataWriter(
     partitionId: Int, taskId: Long)
     extends DataWriter[InternalRow] {
 
-  private val BlockRows = 65536
-  private val BlockBytes = 32L << 20
-
-  private val nCols = cols.length
-  private var bufs = Array.fill(nCols)(
-    scala.collection.mutable.ArrayBuffer.empty[Array[Byte]])
-  private var bufBytes = 0L
-  private var blockIdx = 0
-  private var rowCount = 0L
-  private var plan: Array[Codec] = null
-  private var fsstTables: Array[graft.codec.Fsst.Table] = null
-
-  // EncodedBlock fields as written by Spark's parquet writer (partId lives
-  // in the directory name); repetitions must match the reader's projection.
-  // Shared with GraftCompact, which rewrites these rows.
-  private val blockSchema = BlockParquet.Schema
-  private val groupFactory = new SimpleGroupFactory(blockSchema)
-
-  // staged under _staging-<writeId>; the taskId in the name keeps retried
-  // attempts distinct and the name is published UNCHANGED at driver commit
-  // — dedupe of racing attempts comes from the commit coordinator
+  private val blocks = {
+    val cfg = Encoder.EncodeConfig()
+    new BlockAccumulator(cols, partitionId, cfg.blockRows, cfg.zstdLevel)
+  }
+  // the taskId in the name keeps retried attempts distinct — dedupe of
+  // racing attempts comes from the commit coordinator
   // (BatchWrite.useCommitCoordinator default: exactly one attempt per
   // partition gets to send a commit message), NOT from name collisions
-  private val file = new Path(
-    s"$blocksDir/_staging-$writeId/part-$writeId-$partitionId-$taskId.parquet")
-  // opened on first flushed block; abort on a task that never wrote a row
-  // must not CREATE a parquet file just to delete it
-  private var writerOpt: org.apache.parquet.hadoop.ParquetWriter[org.apache.parquet.example.data.Group] = null
-  private def writer = {
-    if (writerOpt == null) {
-      val conf = new Configuration()
-      org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(blockSchema, conf)
-      writerOpt = ExampleParquetWriter.builder(
-          org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(file, conf))
-        .withConf(conf)
-        .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-        .build()
-    }
-    writerOpt
-  }
+  private val out = new BlockParquet.Writer(
+    BlockParquet.stagedFile(blocksDir, writeId, partitionId, taskId))
+  private var rowCount = 0L
 
   override def write(row: InternalRow): Unit = {
     var c = 0
-    while (c < nCols) {
-      val b =
-        if (row.isNullAt(c)) null
-        else row.getUTF8String(c).getBytes
-      bufs(c) += b
-      if (b != null) bufBytes += b.length
+    while (c < cols.length) {
+      blocks.put(c, if (row.isNullAt(c)) null else row.getUTF8String(c).getBytes)
       c += 1
     }
     rowCount += 1
-    if (bufs(0).length >= BlockRows || bufBytes >= BlockBytes) flushBlock()
-  }
-
-  private def flushBlock(): Unit = {
-    if (bufs(0).isEmpty) return
-    val arrays = bufs.map(_.toArray)
-    if (plan == null) {
-      plan = Array.tabulate(nCols)(c =>
-        CodecSelector.select(BlockStats.compute(cols(c), partitionId, arrays(c))))
-      fsstTables = new Array[graft.codec.Fsst.Table](nCols)
-      var c = 0
-      while (c < nCols) {
-        if (plan(c) eq graft.codec.Fsst)
-          fsstTables(c) = new graft.codec.Fsst.Table(
-            graft.codec.Fsst.train(arrays(c).filter(_ != null)))
-        c += 1
-      }
-    }
-    var c = 0
-    while (c < nCols) {
-      val b = BlockCodec.encodeBlock(
-        cols(c), partitionId, blockIdx, arrays(c), plan(c), 3, fsstTables(c))
-      val g = groupFactory.newGroup()
-      g.append("colName", b.colName)
-      g.append("blockIdx", b.blockIdx)
-      g.append("codecId", b.codecId.toInt)
-      g.append("wrapId", b.wrapId.toInt)
-      g.append("rowCount", b.rowCount)
-      g.append("rawBytes", b.rawBytes)
-      g.append("encodedBytes", b.encodedBytes)
-      if (b.minPrefix != null) g.append("minPrefix", b.minPrefix)
-      if (b.maxPrefix != null) g.append("maxPrefix", b.maxPrefix)
-      g.append("data", org.apache.parquet.io.api.Binary.fromConstantByteArray(b.data))
-      writer.write(g)
-      c += 1
-    }
-    blockIdx += 1
-    bufs = Array.fill(nCols)(scala.collection.mutable.ArrayBuffer.empty[Array[Byte]])
-    bufBytes = 0L
+    if (blocks.endRow()) blocks.flush().foreach(out.write)
   }
 
   override def commit(): WriterCommitMessage = {
-    flushBlock()
-    if (rowCount > 0) writer.close()
-    GraftCommit(partitionId, rowCount, if (rowCount > 0) file.toString else null)
+    blocks.flush().foreach(out.write)
+    out.close()
+    GraftCommit(partitionId, rowCount, if (rowCount > 0) out.file.toString else null)
   }
 
-  override def abort(): Unit = {
-    if (writerOpt != null) {
-      try writerOpt.close() catch { case _: Throwable => }
-      try {
-        val fs = file.getFileSystem(new Configuration())
-        fs.delete(file, false)
-        ()
-      } catch { case _: Throwable => }
-    }
-  }
+  override def abort(): Unit = out.abort()
 
   override def close(): Unit = ()
 }

@@ -1,16 +1,24 @@
 package graft.engine
 
-import graft.model.{EncodedBlock, ManifestEntry}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.model.ManifestEntry
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 
 /** Checkpointed per-partition lineage + codec/size metrics, giving encode
   * resumability: a partition whose manifest entry exists under the current
   * run fingerprint is skipped on re-run; stale partial output is cleaned.
   *
-  * The manifest commit is atomic via temp-dir-then-rename — the same
-  * pattern the reference uses for every task output (write temp file, then
-  * putFile: reference csv/CsvToIon.java:175,269).
+  * Publish protocol (BlockParquet's staged rename, as in the DSv2
+  * writers): each task runs the BlockAccumulator kernel over its sorted
+  * partition, writes ONE file under `blocks/_staging-<run>/` and returns a
+  * per-column tally; the driver renames the reported files into
+  * `blocks/partId=N/` and commits the manifest from those tallies plus the
+  * kept entries of completed partitions. The EncodeResult comes from the
+  * same rows — no block file is read back. The manifest commit is atomic
+  * via temp-dir-then-rename — the same pattern the reference uses for
+  * every task output (write temp file, then putFile: reference
+  * csv/CsvToIon.java:175,269).
   */
 object Checkpoint {
 
@@ -38,13 +46,12 @@ object Checkpoint {
       encodedBytes: Long)
 
   def readManifest(spark: SparkSession, outDir: String): Dataset[ManifestEntry] = {
-    import org.apache.spark.sql.functions.col
     StoreMeta.checkFormat(spark.sparkContext.hadoopConfiguration, blocksDir(outDir))
     spark.read.parquet(manifestDir(outDir)).as(Encoders.product[ManifestEntry])
   }
 
-  private def manifestExists(spark: SparkSession, outDir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(manifestDir(outDir))
+  private def exists(spark: SparkSession, file: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(file)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
@@ -74,7 +81,7 @@ object Checkpoint {
     // write/append deletes the Checkpoint manifest by contract, so the data
     // under partId= dirs may be the ONLY copy of appended rows. Our own
     // crashed runs are distinguishable — they leave the in-progress marker.
-    if (!manifestExists(spark, outDir) && !inProgressExists(spark, outDir) &&
+    if (!exists(spark, manifestDir(outDir)) && !exists(spark, inProgressFile(outDir)) &&
         hasCommittedBlocks(spark, outDir))
       throw new IllegalStateException(
         s"$outDir has block files but no Checkpoint manifest — it was " +
@@ -94,26 +101,23 @@ object Checkpoint {
       md.digest(s"$baseFp|skew:$canon".getBytes("UTF-8")).map(b => f"$b%02x").mkString
     }
 
-    val completed: Set[Int] =
-      if (!manifestExists(spark, outDir)) Set.empty
-      else
-        readManifest(spark, outDir)
-          .filter(_.fingerprint == fp)
-          .collect()
-          .map(_.partId)
-          .toSet
+    val existing: Seq[ManifestEntry] =
+      if (!exists(spark, manifestDir(outDir))) Nil
+      else readManifest(spark, outDir).collect().toSeq
+    val kept = existing.filter(_.fingerprint == fp)
+    val completed: Set[Int] = kept.map(_.partId).toSet
 
     // fully-resumed fast path: the complete marker (written only after the
     // manifest commit) is the exact signal — the manifest alone cannot be,
     // because empty hash partitions emit no blocks and so no entries. The
     // entry-count check remains as a fallback for stores written before
     // the marker existed.
-    val fullyResumed = manifestExists(spark, outDir) &&
+    val fullyResumed = exists(spark, manifestDir(outDir)) &&
       (readMarker(spark, completeFile(outDir)).contains(fp) ||
         (completed.size >= cfg.numPartitions &&
           (0 until cfg.numPartitions).forall(completed.contains)))
 
-    if (!fullyResumed) {
+    val manifest = if (fullyResumed) existing else {
       // the in-progress marker legitimizes cleanUncommitted on a later
       // resume: blocks-without-manifest PLUS this marker = our own crash
       // debris (safe to clean); without it = someone else's committed data
@@ -124,7 +128,8 @@ object Checkpoint {
       deleteFile(spark, completeFile(outDir))
 
       // remove block output of partitions that never reached the manifest
-      // (crashed mid-write) so re-encode does not duplicate
+      // (crashed mid-write), and any crashed run's staging dir, so
+      // re-encode does not duplicate
       cleanUncommitted(spark, outDir, completed)
 
       // stamp the block-format version before any block lands (verified
@@ -138,41 +143,23 @@ object Checkpoint {
       StoreMeta.clearSortKeys(conf, blocksDir(outDir))
 
       val partitioned = Encoder.partitionInput(df, cols, sortKeys, cfg, Some(skew))
-      val blocks = Encoder.encodePartitioned(partitioned, cols, cfg, skipParts = completed)
-      // TOTAL sort key before partitionBy: the encoder emits blocks in
-      // (blockIdx, colName) order per partition, but partitionBy alone plans
-      // a sort on partId only — and a tie-heavy sort that SPILLS merges its
-      // runs in arbitrary tie order, interleaving blockIdx runs within a
-      // file. The readers' streaming group cursor requires monotonic
-      // blockIdx per file; sorting on the full key makes that an invariant
-      // of the write, not an accident of spill behavior.
-      blocks
-        .sortWithinPartitions(col("partId"), col("blockIdx"), col("colName"))
-        .write
-        .mode(SaveMode.Append)
-        .partitionBy("partId")
-        .parquet(blocksDir(outDir))
+      val bdir = blocksDir(outDir)
+      val run = java.util.UUID.randomUUID().toString.take(12)
+      val colNames = cols.toArray
+      // same plan as Encoder.encodePartitioned, so partition ids (and with
+      // them the resume fingerprint) are unchanged
+      val staged = partitioned.queryExecution.toRdd.mapPartitions { rows =>
+        val partId = TaskContext.getPartitionId()
+        if (completed.contains(partId)) Iterator.empty
+        else stagePartition(rows, colNames, partId, cfg, bdir, run, fp).iterator
+      }.collect()
+      val bpath = new org.apache.hadoop.fs.Path(bdir)
+      val fs = bpath.getFileSystem(conf)
+      staged.foreach(p => BlockParquet.publish(fs, bpath, p.partId, p.file))
+      fs.delete(BlockParquet.stagingDir(bdir, run), true)
 
-      // rebuild the manifest from the blocks actually on disk, then commit
-      // it. A zero-row input writes NO block files (dynamic partitionBy
-      // emits nothing), so reading blocksDir would die on schema inference
-      // — an empty input is a legitimate result (upstream filter matched
-      // nothing) and commits an empty manifest instead of crashing.
-      val manifest =
-        if (!hasCommittedBlocks(spark, outDir))
-          spark.emptyDataset(Encoders.product[ManifestEntry]).toDF()
-        else spark.read.parquet(blocksDir(outDir))
-          .groupBy(col("partId"), col("colName"))
-          .agg(
-            concat_ws(",", sort_array(collect_set(col("codecId")))).as("codecIds"),
-            count(lit(1)).as("nBlocks"),
-            sum(col("rowCount")).as("rowCount"),
-            sum(col("rawBytes")).as("rawBytes"),
-            sum(col("encodedBytes")).as("encodedBytes"))
-          .withColumn("fingerprint", lit(fp))
-          .select("partId", "colName", "codecIds", "nBlocks", "rowCount",
-            "rawBytes", "encodedBytes", "fingerprint")
-      commitManifest(spark, manifest, outDir)
+      val committed = kept ++ staged.flatMap(_.entries)
+      commitManifest(spark, committed, outDir)
 
       // record the sorted-by prefix the encode actually guarantees: the
       // within-partition order is (head, salt, rest), so with a non-empty
@@ -185,23 +172,41 @@ object Checkpoint {
       // through the marker-matching fast path above, never re-cleans)
       writeMarker(spark, completeFile(outDir), fp)
       deleteFile(spark, inProgressFile(outDir))
+      committed
     }
-
-    // summary from the COMMITTED manifest (one coalesced file): the lazy
-    // manifest plan above would otherwise re-scan and re-aggregate every
-    // block file a second time just for this row
-    val summary = spark.read.parquet(manifestDir(outDir))
-      .agg(sum("rowCount"), sum("rawBytes"), sum("encodedBytes"),
-        countDistinct("partId"))
-      .first()
-    if (summary.isNullAt(0)) // empty manifest = zero-row input: sums are null
-      EncodeResult(0, completed.size, 0L, 0L, 0L)
-    else EncodeResult(
-      completedParts = summary.getLong(3).toInt,
+    EncodeResult(
+      completedParts = manifest.map(_.partId).distinct.size,
       skippedParts = completed.size,
-      rowCount = summary.getLong(0) / math.max(1, cols.length),
-      rawBytes = summary.getLong(1),
-      encodedBytes = summary.getLong(2))
+      rowCount = manifest.map(_.rowCount).sum / math.max(1, cols.length),
+      rawBytes = manifest.map(_.rawBytes).sum,
+      encodedBytes = manifest.map(_.encodedBytes).sum)
+  }
+
+  /** one encoded partition: its staged block file and per-column tally */
+  private final case class StagedPart(partId: Int, file: String, entries: Seq[ManifestEntry])
+
+  /** Task side of the publish: encode one sorted partition with the shared
+    * kernel into one staged block file and tally each column's manifest
+    * entry from the blocks' metadata. An empty partition writes no file.
+    */
+  private def stagePartition(rows: Iterator[InternalRow], colNames: Array[String],
+      partId: Int, cfg: Encoder.EncodeConfig, bdir: String, run: String,
+      fp: String): Option[StagedPart] = {
+    val out = new BlockParquet.Writer(
+      BlockParquet.stagedFile(bdir, run, partId, TaskContext.get().taskAttemptId()))
+    val meta = scala.collection.mutable.ArrayBuffer.empty[graft.model.EncodedBlock]
+    try {
+      new BlockAccumulator(colNames, partId, cfg.blockRows, cfg.zstdLevel).drain(rows)
+        .foreach { b => out.write(b); meta += b.copy(data = null) }
+      out.close()
+    } catch { case e: Throwable => out.abort(); throw e }
+    if (meta.isEmpty) None
+    else Some(StagedPart(partId, out.file.toString, colNames.toSeq.map { c =>
+      val bs = meta.filter(_.colName == c)
+      ManifestEntry(partId, c, bs.map(_.codecId).distinct.sorted.mkString(","),
+        bs.size, bs.map(_.rowCount.toLong).sum, bs.map(_.rawBytes).sum,
+        bs.map(_.encodedBytes).sum, fp)
+    }))
   }
 
   /** any committed (non-staging) block parquet under partId= dirs */
@@ -212,11 +217,6 @@ object Checkpoint {
       st.getPath.getName.startsWith("partId=") &&
         fs.listStatus(st.getPath).exists(_.getPath.getName.endsWith(".parquet"))
     }
-  }
-
-  private def inProgressExists(spark: SparkSession, outDir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(inProgressFile(outDir))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** single-line marker, temp-then-rename like every commit here */
@@ -303,20 +303,28 @@ object Checkpoint {
     if (!fs.exists(bdir)) return
     fs.listStatus(bdir).foreach { st =>
       val name = st.getPath.getName
-      if (name.startsWith("partId=")) {
+      if (name.startsWith("_staging-")) fs.delete(st.getPath, true)
+      else if (name.startsWith("partId=")) {
         val pid = name.stripPrefix("partId=").toInt
         if (!completed.contains(pid)) fs.delete(st.getPath, true)
       }
     }
   }
 
-  private def commitManifest(spark: SparkSession, manifest: DataFrame, outDir: String): Unit = {
+  private def commitManifest(
+      spark: SparkSession, entries: Seq[ManifestEntry], outDir: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new org.apache.hadoop.fs.Path(s"$outDir/manifest.tmp.d")
     val fin = new org.apache.hadoop.fs.Path(manifestDir(outDir))
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    manifest.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    // every field nullable: readers project the numeric fields as OPTIONAL
+    val schema = org.apache.spark.sql.types.StructType(
+      Encoders.product[ManifestEntry].schema.fields.map(_.copy(nullable = true)))
+    val rows = entries.sortBy(e => (e.partId, e.colName))
+      .map(e => Row.fromSeq(e.productIterator.toSeq))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     if (fs.exists(fin)) fs.delete(fin, true)
     require(fs.rename(tmp, fin), s"atomic manifest rename failed: $tmp -> $fin")
   }
@@ -332,7 +340,7 @@ object Checkpoint {
       // which moves negative-hash rows to different salt buckets — old
       // manifests must not mix with new partitioning (v2: per-partition
       // FSST table reuse changed encoded bytes)
-      s"${cfg.numPartitions}|${cfg.blockRows}|${cfg.blockBytes}|${cfg.skewFactor}|${cfg.zstdLevel}|v3"
+      s"${cfg.numPartitions}|${cfg.blockRows}|${Encoder.BlockBytes}|${Encoder.SkewFactor}|${cfg.zstdLevel}|v3"
     md.digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
   }
 }

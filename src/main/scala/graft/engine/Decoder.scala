@@ -53,8 +53,8 @@ object Decoder {
     // decoded bytes as UTF8String directly (no copy, no validation layer).
     val spark = blocks.sparkSession
     // canonical column order + types BEFORE the positional InternalRow
-    // reads below: a block table read back from a partitioned store has
-    // partId moved to the END of its file schema (partitionBy column), and
+    // reads below: a block table read back from a store has partId moved
+    // to the END of its schema (the `partId=N` directory column), and
     // the typed Dataset seam only fixes that up at deserialization — which
     // this drain skips
     val canonical = wanted.select(
@@ -81,10 +81,11 @@ object Decoder {
             val r = rows.next()
             // loud on null metadata: the old typed deserializer threw on a
             // null primitive field; positional getInt/getLong on a null
-            // slot would silently read 0 and mis-group the block instead
+            // slot would silently read 0 and mis-group the block instead.
+            // Fields 8-9 (the min/max prefixes) are null for all-null blocks.
             var c = 0
             while (c <= 7) {
-              if (c != 8 && c != 9 && r.isNullAt(c))
+              if (r.isNullAt(c))
                 throw new IllegalStateException(
                   s"corrupt block row: null metadata field #$c")
               c += 1

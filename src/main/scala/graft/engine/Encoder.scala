@@ -1,41 +1,43 @@
 package graft.engine
 
-import graft.codec.Codec
 import graft.model.{ColStats, EncodedBlock}
-import graft.plan.CodecSelector
 import graft.stats.BlockStats
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
-/** The encode pass: explicit range partitioning on the sort keys, salted-key
-  * splitting for skewed repos, partition-local sampling-pass → codec plan,
-  * then streaming block encode via mapPartitions (per SURVEY.md §2.6: block
-  * encode over a sorted partition beats any per-row UDF).
+/** The encode pass: hash partitioning on the sort keys, salted-key
+  * splitting for skewed repos, then one BlockAccumulator per sorted
+  * partition (per SURVEY.md §2.6: block encode over a sorted partition
+  * beats any per-row UDF).
   *
   * Lifecycle mirrors the reference's two-pass encode archetype
   * (reference: parquet/IonToParquet.java:155-204 — inference pass, then
-  * conversion pass): pass 1 here is the first block of each partition,
-  * whose exact stats drive the per-partition codec plan; every later block
-  * re-validates applicability before trusting the plan.
+  * conversion pass): pass 1 is the first block of each partition, whose
+  * exact stats drive the per-partition codec plan. BlockAccumulator is the
+  * only block-encode loop; Checkpoint, the DSv2 batch write and the
+  * streaming sink feed the same kernel, so every path writes the same
+  * block bytes for the same sorted partition.
   */
 object Encoder {
 
   final case class EncodeConfig(
       numPartitions: Int = 32,
       blockRows: Int = 65536,
-      /** cut a block early once summed raw column bytes exceed this */
-      blockBytes: Long = 32L << 20,
-      /** a key whose row count exceeds skewFactor × (rows/partitions) gets
-        * salted into ~target/4-row buckets — many small weighted groups
-        * hash-balance far better than few target-sized ones
-        */
-      skewFactor: Double = 0.5,
       zstdLevel: Int = 3)
+
+  /** cut a block early once its summed raw cell bytes reach this */
+  val BlockBytes: Long = 32L << 20
+
+  /** a key whose row count exceeds SkewFactor × (rows/partitions) gets
+    * salted into ~target/4-row buckets — many small weighted groups
+    * hash-balance far better than few target-sized ones
+    */
+  val SkewFactor = 0.5
 
   /** Fraction of rows the skew-plan pass reads (the sampling pass of the
     * north rule applied to skew detection; a repo only matters here when it
-    * holds ≥ skewFactor/numPartitions of ALL rows, which a 5% sample
+    * holds ≥ SkewFactor/numPartitions of ALL rows, which a 5% sample
     * estimates reliably).
     */
   val SkewSampleFraction = 0.05
@@ -44,8 +46,8 @@ object Encoder {
     *
     * The heavy-hitter filter runs IN SPARK before any collect: at 100× scale
     * (millions of distinct repos) collecting one row per repo would OOM the
-    * driver, but the set of keys holding > skewFactor/numPartitions of all
-    * rows is ≤ numPartitions/skewFactor entries by construction — tiny.
+    * driver, but the set of keys holding > SkewFactor/numPartitions of all
+    * rows is ≤ numPartitions/SkewFactor entries by construction — tiny.
     */
   def skewPlan(df: DataFrame, skewKey: String, cfg: EncodeConfig): Map[String, Int] = {
     val sampled = df.select(col(skewKey)).sample(SkewSampleFraction, seed = 42L)
@@ -55,7 +57,7 @@ object Encoder {
       if (totalRow.isNullAt(0)) return Map.empty
       val total = totalRow.getLong(0)
       val target = math.max(1L, total / math.max(1, cfg.numPartitions))
-      val threshold = (cfg.skewFactor * target).toLong
+      val threshold = (SkewFactor * target).toLong
       counts
         .filter(col("cnt") > threshold && col(skewKey).isNotNull)
         .collect()
@@ -129,99 +131,22 @@ object Encoder {
     * Drains the plan as InternalRows (queryExecution.toRdd) instead of
     * Dataset.mapPartitions: the external-Row deserializer layer
     * (DeserializeToObject + GenericRow per row) is pure overhead for a
-    * loop that only reads binary cells — InternalRow.getBinary copies the
-    * exact same bytes without materializing a Row object per row
-    * (EncodeBreakdown's `rowconv` delta measures this layer). Row order,
-    * partition ids and block bytes are unchanged — the physical plan below
-    * the drain is identical, so resume fingerprints stay valid. A side
-    * benefit: the block RDD is a single shared lineage, so a plan that
-    * consumes the blocks twice (e.g. decodeWhereEq's key pass + hit join)
-    * reuses one co-location shuffle instead of re-planning it per subtree.
+    * loop that only reads binary cells (EncodeBreakdown's `rowconv` delta
+    * measures this layer). A side benefit: the block RDD is a single shared
+    * lineage, so a plan that consumes the blocks twice (e.g.
+    * decodeWhereEq's key pass + hit join) reuses one co-location shuffle
+    * instead of re-planning it per subtree.
     */
   def encodePartitioned(
       partitioned: DataFrame,
       cols: Seq[String],
-      cfg: EncodeConfig,
-      skipParts: Set[Int] = Set.empty): Dataset[EncodedBlock] = {
+      cfg: EncodeConfig): Dataset[EncodedBlock] = {
     val colNames = cols.toArray
-    val spark = partitioned.sparkSession
     val rdd = partitioned.queryExecution.toRdd.mapPartitions { rows =>
-      val partId = TaskContext.getPartitionId()
-      if (skipParts.contains(partId)) Iterator.empty
-      else new PartitionEncoder(rows, colNames, partId, cfg)
+      new BlockAccumulator(colNames, TaskContext.getPartitionId(), cfg.blockRows,
+        cfg.zstdLevel).drain(rows)
     }
-    spark.createDataset(rdd)(Encoders.product[EncodedBlock])
-  }
-
-  /** Streaming block encoder over one sorted partition. Holds at most one
-    * block of raw values per column in memory (bounded like the reference's
-    * buffered Flux pipelines, avro/AbstractAvroConverter.java:185-208).
-    */
-  private final class PartitionEncoder(
-      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-      colNames: Array[String],
-      partId: Int,
-      cfg: EncodeConfig)
-      extends Iterator[EncodedBlock] {
-
-    private val nCols = colNames.length
-    private val pending = scala.collection.mutable.Queue.empty[EncodedBlock]
-    private var blockIdx = 0
-    private var plan: Array[Codec] = null
-    // per-column FSST table trained ONCE on the partition's first block and
-    // reused for every later block (training is the encode hot-path cost;
-    // the sorted partition keeps content locality so the table stays apt)
-    private var fsstTables: Array[graft.codec.Fsst.Table] = null
-
-    override def hasNext: Boolean = pending.nonEmpty || rows.hasNext
-
-    override def next(): EncodedBlock = {
-      if (pending.isEmpty) fill()
-      pending.dequeue()
-    }
-
-    private def fill(): Unit = {
-      val bufs = Array.fill(nCols)(scala.collection.mutable.ArrayBuffer.empty[Array[Byte]])
-      var bytes = 0L
-      var n = 0
-      while (rows.hasNext && n < cfg.blockRows && bytes < cfg.blockBytes) {
-        val r = rows.next()
-        var c = 0
-        while (c < nCols) {
-          // getBinary copies out of the (reused) UnsafeRow buffer — safe to
-          // retain across rows
-          val b = if (r.isNullAt(c)) null else r.getBinary(c)
-          bufs(c) += b
-          if (b != null) bytes += b.length
-          c += 1
-        }
-        n += 1
-      }
-      val arrays = bufs.map(_.toArray)
-      if (plan == null) {
-        // sampling pass: exact stats of the partition's first block pick the
-        // per-partition codec plan (≙ InferAvroSchema's bounded scan)
-        plan = Array.tabulate(nCols) { c =>
-          CodecSelector.select(BlockStats.compute(colNames(c), partId, arrays(c)))
-        }
-        fsstTables = new Array[graft.codec.Fsst.Table](nCols)
-        var c = 0
-        while (c < nCols) {
-          if (plan(c) eq graft.codec.Fsst)
-            fsstTables(c) = new graft.codec.Fsst.Table(
-              graft.codec.Fsst.train(arrays(c).filter(_ != null)))
-          c += 1
-        }
-      }
-      var c = 0
-      while (c < nCols) {
-        pending += BlockCodec.encodeBlock(
-          colNames(c), partId, blockIdx, arrays(c), plan(c), cfg.zstdLevel,
-          fsstTables(c))
-        c += 1
-      }
-      blockIdx += 1
-    }
+    partitioned.sparkSession.createDataset(rdd)(Encoders.product[EncodedBlock])
   }
 
   /** The standalone sampled statistics pass, exposed as a first-class job:

@@ -370,7 +370,7 @@ object CoreQueries {
 
   /** Block-cutting arithmetic pinned by a DuckDB oracle: a single-partition
     * encode with blockRows=64 makes blocks-per-column exactly ceil(N/64)
-    * (the 32 MB blockBytes early-cut cannot trigger at 64 document rows),
+    * (the 32 MB Encoder.BlockBytes early-cut cannot trigger at 64 document rows),
     * rows = N, and raw_bytes = per-column UTF-8 byte totals (BlockCodec
     * counts value bytes; nulls contribute 0 and docsAsStrings has none) —
     * all three recomputable from the original table, so any drift in the

@@ -8,7 +8,10 @@ import org.apache.spark.sql.functions._
 
 /** End-to-end drive of the engine through its public API: synthesize the
   * source-code table → resumable encode to disk → read blocks back →
-  * decode → verify per-row sha256 bit-identity + report codec/size metrics.
+  * decode → verify per-row sha256 bit-identity + report codec/size metrics;
+  * then encode again into the same outDir, which must resume every
+  * partition (skipped == completed, same totals) and still decode
+  * bit-identically.
   *
   * Usage: sbt "runMain graft.tools.E2eDrive [rows] [outDir]"
   */
@@ -31,34 +34,44 @@ object E2eDrive {
     val cfg = Encoder.EncodeConfig(numPartitions = 16)
 
     val df = DataGen.table(spark, DataGen.GenConfig(rows = rows)).toDF()
-    val res = Checkpoint.encodeResumable(df, cols, sortKeys, cfg, outDir,
-      inputFingerprint = s"gen:seed=42:rows=$rows")
-    println(s"[e2e] encode: parts=${res.completedParts} skipped=${res.skippedParts} " +
-      s"rows=${res.rowCount} raw=${res.rawBytes} encoded=${res.encodedBytes} " +
-      f"ratio=${res.rawBytes.toDouble / math.max(1, res.encodedBytes)}%.2fx")
+    def encode(label: String): Checkpoint.EncodeResult = {
+      val res = Checkpoint.encodeResumable(df, cols, sortKeys, cfg, outDir,
+        inputFingerprint = s"gen:seed=42:rows=$rows")
+      println(s"[e2e] $label encode: parts=${res.completedParts} skipped=${res.skippedParts} " +
+        s"rows=${res.rowCount} raw=${res.rawBytes} encoded=${res.encodedBytes} " +
+        f"ratio=${res.rawBytes.toDouble / math.max(1, res.encodedBytes)}%.2fx")
+      res
+    }
 
+    /** decode the store on disk and compare per-row sha256 multisets */
+    def roundTrips(label: String): Boolean = {
+      val blocks = spark.read.parquet(Checkpoint.blocksDir(outDir))
+        .as(Encoders.product[EncodedBlock])
+      val decoded = Decoder.decode(blocks, cols)
+      val mismatches = graft.verify.Sha256Check.mismatchGroups(df, decoded, cols)
+      val nDecoded = decoded.count()
+      println(s"[e2e] $label decoded rows=$nDecoded expected=$rows sha-mismatch-groups=$mismatches")
+      val ok = nDecoded == rows && mismatches == 0
+      if (ok) println(s"[e2e] PASS: bit-identical round-trip ($label)")
+      ok
+    }
+
+    val fresh = encode("fresh")
     Checkpoint.readManifest(spark, outDir)
       .groupBy("colName", "codecIds")
       .agg(sum("rawBytes").as("raw"), sum("encodedBytes").as("enc"),
         sum("rowCount").as("rows"))
       .orderBy("colName")
       .show(50, truncate = false)
+    val freshOk = roundTrips("fresh")
 
-    val blocks = spark.read.parquet(Checkpoint.blocksDir(outDir))
-      .as(Encoders.product[EncodedBlock])
-    val decoded = Decoder.decode(blocks, cols)
+    val resumed = encode("resumed")
+    // a full resume skips every partition and reports the same totals
+    val resumeOk = resumed == fresh.copy(skippedParts = fresh.completedParts)
+    if (!resumeOk) println(s"[e2e] resumed run differs: fresh=$fresh resumed=$resumed")
+    val resumedOk = roundTrips("resumed")
 
-    val origH = df.select(cols.map(c => sha2(col(c), 256).as(c)): _*)
-      .groupBy(cols.map(col): _*).count()
-    val decH = decoded.select(cols.map(c => sha2(col(c), 256).as(c)): _*)
-      .groupBy(cols.map(col): _*).count()
-    val mismatches = origH.join(decH, cols, "full_outer")
-      .where(origH("count").isNull || decH("count").isNull ||
-        origH("count") =!= decH("count"))
-      .count()
-    val nDecoded = decoded.count()
-    println(s"[e2e] decoded rows=$nDecoded expected=$rows sha-mismatch-groups=$mismatches")
-    if (nDecoded == rows && mismatches == 0) println("[e2e] PASS: bit-identical round-trip")
+    if (freshOk && resumeOk && resumedOk) println("[e2e] PASS: fresh and resumed")
     else { println("[e2e] FAIL"); sys.exit(1) }
     spark.stop()
   }
