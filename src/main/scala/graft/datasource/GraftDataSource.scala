@@ -22,11 +22,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * The scan plan is the one a 100 TB decode wants:
   *   - one InputPartition per encoder partition directory → blocks of a
   *     row group are CO-LOCATED, so reconstruction needs NO shuffle
-  *     (Decoder.decode pays one groupByKey shuffle for the same work);
+  *     (Decoder.decode pays one co-location shuffle for the same work);
   *   - SupportsPushDownRequiredColumns → only requested columns decoded;
-  *   - SupportsPushDownFilters: EqualTo on any column prunes whole blocks
-  *     via BlockCodec.mayContain (dict binary-search / FoR range check)
-  *     before any decompression, then late-materializes only matching rows.
+  *   - SupportsPushDownFilters: pushed predicates prune whole block groups
+  *     before any decompression, then only matching rows materialize —
+  *     both done by the decode kernel Decoder uses too
+  *     (graft.engine.BlockGroupDecoder).
   * Filters are also left in the plan as residuals, so Spark re-checks them
   * — pruning can only skip, never fabricate.
   */
@@ -188,7 +189,6 @@ class GraftScanBuilder(path: String, schema: StructType)
 
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = schema
-  private var countStar = false
   private var aggSpecs: Seq[GraftAgg] = Nil
   private var limit: Int = -1
   // non-empty iff `limit` came from pushTopN: the sort-marker snapshot the
@@ -294,8 +294,7 @@ class GraftScanBuilder(path: String, schema: StructType)
       case _ => None
     }
     if (specs.exists(_.isEmpty) || specs.isEmpty) return false
-    if (specs.length == 1 && specs.head.get.kind == "count") countStar = true
-    else aggSpecs = specs.map(_.get)
+    aggSpecs = specs.map(_.get)
     true
   }
 
@@ -303,12 +302,10 @@ class GraftScanBuilder(path: String, schema: StructType)
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = false
 
   /** A user-supplied schema (supportsExternalMetadata) can name columns the
-    * store has NOWHERE: the cursor's per-partition absent→null convention
-    * (meant for a column missing from ONE partition) would silently serve
-    * all-nulls — and eq/in predicates on the ghost column would prune every
-    * block — so a typo'd column returns plausible-looking nothing instead
-    * of an error. Validate once per planned scan against the store's real
-    * column set; an empty store is fine (the scan yields no rows anyway).
+    * store has nowhere. Every block group would then fail as missing that
+    * column; validate once per planned scan against the store's real column
+    * set so the error names the schema, not a group. An empty store is fine
+    * (the scan yields no rows anyway).
     */
   private def validateColumns(): Unit = {
     val asked = (required.fieldNames ++ pushed.flatMap(_.references)).toSet
@@ -327,8 +324,7 @@ class GraftScanBuilder(path: String, schema: StructType)
 
   override def build(): Scan = {
     validateColumns()
-    if (countStar) GraftCountStarScan(path)
-    else if (aggSpecs.nonEmpty) GraftAggScan(path, aggSpecs)
+    if (aggSpecs.nonEmpty) GraftAggScan(path, aggSpecs)
     else {
       val preds = pushed.collect {
         case EqualTo(a, v: String) => GraftPred("eq", a, v)
@@ -401,56 +397,6 @@ object GraftPruning {
       // can skip it outright (the only sound direction without null counts)
       case "notnull" => pMin != null || pMax != null
       case _ => true
-    }
-}
-
-/** metadata-only COUNT(*): one long per partition from block rowCounts */
-final case class GraftCountStarScan(path: String) extends Scan with Batch {
-  override def readSchema(): StructType =
-    StructType(Seq(StructField("count", org.apache.spark.sql.types.LongType)))
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"GraftCountStarScan path=$path (metadata-only, no decode)"
-
-  override def planInputPartitions(): Array[InputPartition] =
-    GraftScan(path, readSchema(), Seq.empty).planInputPartitions()
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new PartitionReader[InternalRow] {
-          private val part = p.asInstanceOf[GraftInputPartition]
-          private var done = false
-          private var count = 0L
-          override def next(): Boolean = {
-            if (done) return false
-            val conf = new Configuration()
-            // metadata-only: project the two tiny columns — the heavy
-            // `data` pages are never read, let alone decompressed
-            conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-              "message g { optional binary colName (UTF8); required int32 rowCount; }")
-            var firstCol: String = null
-            part.files.foreach { f =>
-              val reader = ParquetReader
-                .builder(new GroupReadSupport(), new Path(f))
-                .withConf(conf)
-                .build()
-              try {
-                var g = reader.read()
-                while (g != null) {
-                  val c = g.getString("colName", 0)
-                  if (firstCol == null) firstCol = c
-                  if (c == firstCol) count += g.getInteger("rowCount", 0)
-                  g = reader.read()
-                }
-              } finally reader.close()
-            }
-            done = true
-            true
-          }
-          override def get(): InternalRow = InternalRow(count)
-          override def close(): Unit = ()
-        }
     }
 }
 
@@ -1080,51 +1026,56 @@ final case class GraftInputPartition(partId: Int, files: Array[String])
 final case class GraftReaderFactory(requiredCols: Array[String], preds: Seq[GraftPred],
     limit: Int = -1)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GraftRowReader(
-      partition.asInstanceOf[GraftInputPartition], requiredCols, preds, limit)
-
   // Vectorized path: each surviving block group becomes ONE ColumnarBatch
   // (block size == batch size), so downstream whole-stage codegen consumes
   // column vectors directly instead of allocating an InternalRow per row.
+  // Spark therefore only plans the columnar reader; the row reader is its
+  // batches' rows.
   override def supportColumnarReads(partition: InputPartition): Boolean = true
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new PartitionReader[InternalRow] {
+      private val batches = createColumnarReader(partition)
+      private var rows: java.util.Iterator[InternalRow] = java.util.Collections.emptyIterator()
+      private var current: InternalRow = _
+      override def next(): Boolean = {
+        while (!rows.hasNext) {
+          if (!batches.next()) return false
+          rows = batches.get().rowIterator()
+        }
+        current = rows.next()
+        true
+      }
+      override def get(): InternalRow = current
+      override def close(): Unit = batches.close()
+    }
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new GraftColumnarReader(
       partition.asInstanceOf[GraftInputPartition], requiredCols, preds, limit)
 }
 
-/** Shared scan cursor: reads one encoder partition as a STREAM of block
-  * groups. Block rows of each file are grouped by consecutive blockIdx runs
-  * (both graft writers emit a partition's blocks column-interleaved in
-  * increasing blockIdx order, so one run == one row group), each group is
-  * pruned via min/max prefixes + mayContain on the filter columns, and only
-  * surviving groups decode the needed columns. Memory is bounded by ONE
-  * block group (plus the parquet reader's own row-group buffer) — never the
+/** Scan cursor: reads one encoder partition as a STREAM of block groups
+  * and hands each to the decode kernel (graft.engine.BlockGroupDecoder),
+  * which prunes, decodes, checks and late-materializes it. Block rows of
+  * each file are grouped by consecutive blockIdx runs (both graft writers
+  * emit a partition's blocks column-interleaved in increasing blockIdx
+  * order, so one run == one row group). Memory is bounded by ONE block
+  * group (plus the parquet reader's own row-group buffer) — never the
   * whole partition, which at 100 TB can be arbitrarily many blocks.
   *
   * Groups are keyed per FILE: a partition directory may hold several files
   * (append-mode writes, resumed jobs) and blockIdx is only unique within
   * one file. A non-monotonic blockIdx inside a file would mean the store
   * was not written by a graft writer; the cursor fails loudly rather than
-  * risk a silently split group (missing column → null).
+  * risk a silently split group.
   */
 private[datasource] final class GraftGroupCursor(
     partition: GraftInputPartition,
     requiredCols: Array[String],
     preds: Seq[GraftPred]) {
 
-  private val eq: Map[String, String] =
-    preds.collect { case GraftPred("eq", c, v, _) => c -> v }.toMap
-  // probe values held as ARRAYS: the block-level mayContainAny probe runs
-  // once per block group, and re-materializing a capped 10k-value Seq into
-  // a fresh array per group is pure GC pressure on the pruning hot path
-  private val inPreds: Seq[(String, Array[Array[Byte]])] =
-    preds.collect { case GraftPred("in", c, _, vs) =>
-      c -> vs.map(_.getBytes("UTF-8")).toArray }
-
-  private val neededCols: Set[String] =
-    requiredCols.toSet ++ preds.map(_.col)
+  private val kernel = new graft.engine.BlockGroupDecoder(requiredCols, preds)
+  private val neededCols: Set[String] = kernel.neededCols.toSet
 
   // count(*)-style scans prune EVERY column: row multiplicity still must
   // be produced, so fall back to reading one arbitrary column's blocks
@@ -1144,6 +1095,7 @@ private[datasource] final class GraftGroupCursor(
         .reduce(org.apache.parquet.filter2.predicate.FilterApi.or(_, _))))
 
   private val fileIt: Iterator[String] = partition.files.iterator
+  private var file: String = null
   private var reader: ParquetReader[org.apache.parquet.example.data.Group] = null
   private var lookahead: EncodedBlock = null // first block of the NEXT group
   private var maxIdxSeen: Int = -1
@@ -1164,8 +1116,10 @@ private[datasource] final class GraftGroupCursor(
     null
   }
 
-  /** next complete block group across all files, or null when exhausted */
-  private def nextGroup(): Map[String, EncodedBlock] = {
+  /** next complete block group across all files (its blockIdx is left in
+    * `maxIdxSeen`, its file in `file`), or null when exhausted
+    */
+  private def nextGroup(): scala.collection.Map[String, EncodedBlock] = {
     while (true) {
       if (reader == null) {
         if (!fileIt.hasNext) return null
@@ -1178,8 +1132,9 @@ private[datasource] final class GraftGroupCursor(
           conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
             "message g { optional binary colName (UTF8); " +
               "required int32 blockIdx; required int32 rowCount; }")
+        file = fileIt.next()
         val builder0 = ParquetReader
-          .builder(new GroupReadSupport(), new Path(fileIt.next()))
+          .builder(new GroupReadSupport(), new Path(file))
           .withConf(conf)
         reader = colFilter.fold(builder0)(builder0.withFilter).build()
         maxIdxSeen = -1
@@ -1199,120 +1154,27 @@ private[datasource] final class GraftGroupCursor(
           m(lookahead.colName) = lookahead
           lookahead = readBlockRow()
         }
-        return m.toMap
+        return m
       }
     }
     null // unreachable
   }
 
-  private val eqBytes: Map[String, Array[Byte]] =
-    eq.map { case (k, v) => k -> v.getBytes("UTF-8") }
-  // lazily built hashed In-sets for the row-level pass (one per column)
-  private val inSets =
-    scala.collection.mutable.HashMap.empty[String, java.util.HashSet[java.nio.ByteBuffer]]
-
-  /** Decoded values of the required columns for the next surviving block
-    * group: (matching row ids, per-required-col value arrays — a null slot
-    * when that column is absent from this partition, i.e. all-null).
-    * Returns null when the partition is exhausted.
+  /** the kernel's result for the next surviving block group, or null when
+    * the partition is exhausted
     */
-  def nextSurviving(): (Array[Int], Array[Array[Array[Byte]]]) = {
+  def nextSurviving(): graft.engine.BlockGroupDecoder.Matched = {
     while (true) {
-      val cols = nextGroup()
-      if (cols == null) return null
-      // 1a. metadata pruning on the block's min/max value prefixes — every
-      //     pushed predicate kind, no decompression at all
-      val metaPruned = preds.exists { p =>
-        cols.get(p.col).exists(b =>
-          !GraftPruning.blockMayMatch(p, b.minPrefix, b.maxPrefix))
-      }
-      // 1b. equality/in-list pruning (cheap: membership filter probe, then
-      //     dict binary-search / FoR range meta — batched, so a large
-      //     In-set parses the block header and dictionary ONCE); a column
-      //     absent from the partition is all-null → prune
-      val pruned = metaPruned || eqBytes.exists { case (k, v) =>
-        cols.get(k).forall(b => !BlockCodec.mayContain(b, v))
-      } || inPreds.exists { case (k, vs) =>
-        cols.get(k).forall(b => !BlockCodec.mayContainAny(b, vs))
-      }
-      if (!pruned) {
-        // 2. decode filter columns first, intersect matching row ids
-        val decoded = scala.collection.mutable.HashMap.empty[String, Array[Array[Byte]]]
-        def col(name: String): Array[Array[Byte]] =
-          decoded.getOrElseUpdate(name, BlockCodec.decodeBlock(cols(name)))
-        val n = cols.valuesIterator.next().rowCount
-        var matching: Array[Int] = (0 until n).toArray
-        if (eqBytes.nonEmpty && eqBytes.keysIterator.forall(cols.contains)) {
-          eqBytes.foreach { case (k, v) =>
-            val kv = col(k)
-            matching = matching.filter(i =>
-              kv(i) != null && java.util.Arrays.equals(kv(i), v))
-          }
-        } // else: let Spark's residual decide
-        if (inPreds.nonEmpty && inPreds.forall(p => cols.contains(p._1))) {
-          inPreds.foreach { case (k, vs) =>
-            val kv = col(k)
-            // hashed membership: a runtime join-key set can hold thousands
-            // of values — a linear exists() per row would be O(rows x set)
-            val set = inSets.getOrElseUpdate(k, {
-              val s = new java.util.HashSet[java.nio.ByteBuffer](vs.length * 2)
-              vs.foreach(v => s.add(java.nio.ByteBuffer.wrap(v)))
-              s
-            })
-            matching = matching.filter(i => kv(i) != null &&
-              set.contains(java.nio.ByteBuffer.wrap(kv(i))))
-          }
-        }
-        if (matching.nonEmpty) {
-          // 3. late materialization: decode required columns only now
-          val outCols = requiredCols.map(c =>
-            if (cols.contains(c)) col(c) else null)
-          return (matching, outCols)
-        }
-      }
+      val group = nextGroup()
+      if (group == null) return null
+      val matched = kernel.decode(group, partition.partId, maxIdxSeen, file)
+      if (matched != null) return matched
     }
     null // unreachable
   }
 
   def close(): Unit =
     if (reader != null) { reader.close(); reader = null }
-}
-
-/** row-based reader over the shared cursor; a pushed limit short-circuits
-  * the whole cursor — later block groups are never read, let alone decoded
-  */
-final class GraftRowReader(
-    partition: GraftInputPartition,
-    requiredCols: Array[String],
-    preds: Seq[GraftPred],
-    limit: Int = -1)
-    extends PartitionReader[InternalRow] {
-
-  private val cursor = new GraftGroupCursor(partition, requiredCols, preds)
-  private var rows: Iterator[InternalRow] = Iterator.empty
-  private var current: InternalRow = _
-  private var emitted = 0L
-
-  override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
-    while (!rows.hasNext) {
-      val g = cursor.nextSurviving()
-      if (g == null) return false
-      val (matching, outCols) = g
-      rows = matching.iterator.map { i =>
-        InternalRow.fromSeq(outCols.toIndexedSeq.map { vals =>
-          if (vals == null || vals(i) == null) null
-          else UTF8String.fromBytes(vals(i))
-        })
-      }
-    }
-    current = rows.next()
-    emitted += 1
-    true
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = cursor.close()
 }
 
 /** vectorized reader: one ColumnarBatch per surviving block group */
@@ -1335,7 +1197,7 @@ final class GraftColumnarReader(
     if (limit >= 0 && emitted >= limit) return false
     val g = cursor.nextSurviving()
     if (g == null) return false
-    val (allMatching, outCols) = g
+    val allMatching = g.rows
     // pushed limit: trim the final batch to the remaining budget
     val matching =
       if (limit >= 0 && emitted + allMatching.length > limit)
@@ -1347,15 +1209,12 @@ final class GraftColumnarReader(
     var j = 0
     while (j < requiredCols.length) {
       val v = new OnHeapColumnVector(n, StringType)
-      val vals = outCols(j)
-      if (vals == null) v.putNulls(0, n) // column absent in this partition
-      else {
-        var i = 0
-        while (i < n) {
-          val b = vals(matching(i))
-          if (b == null) v.putNull(i) else v.putByteArray(i, b, 0, b.length)
-          i += 1
-        }
+      val vals = g.values(j)
+      var i = 0
+      while (i < n) {
+        val b = vals(matching(i))
+        if (b == null) v.putNull(i) else v.putByteArray(i, b, 0, b.length)
+        i += 1
       }
       vectors(j) = v
       j += 1

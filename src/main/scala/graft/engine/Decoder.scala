@@ -1,11 +1,13 @@
 package graft.engine
 
+import graft.datasource.GraftPred
 import graft.model.EncodedBlock
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
-import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.types.{StructField, StructType}
 
-/** The decode pass: regroup a block table by (partId, blockIdx), decode each
-  * column block, and zip the columns back into rows — the inverse of
+/** The decode pass: regroup a block table by (partId, blockIdx) and hand
+  * each group to the one decode kernel (`BlockGroupDecoder`), which decodes
+  * and checks it and zips the columns back into rows — the inverse of
   * BlockCodec, and the analog of the reference's validated decode path
   * (reference: avro/AvroToIon.java:88-136). Bit-identity of every value is
   * the contract (sha256-per-row verified in graft.verify).
@@ -26,7 +28,7 @@ object Decoder {
   /** Decode a block STORE on disk (the Checkpoint outDir layout) through
     * the DataSource V2 reader: blocks of a row group are co-located per
     * partition directory, so reconstruction is SHUFFLE-FREE — prefer this
-    * over `decode` (one groupByKey shuffle) whenever the blocks are on
+    * over `decode` (one co-location shuffle) whenever the blocks are on
     * disk rather than an in-flight Dataset.
     */
   def decodeStore(spark: org.apache.spark.sql.SparkSession, storeDir: String,
@@ -35,7 +37,28 @@ object Decoder {
       .select(cols.map(org.apache.spark.sql.functions.col): _*)
 
   def decode(blocks: Dataset[EncodedBlock], cols: Seq[String],
-      onBad: OnBadBlocks = ErrorOnBadBlocks): DataFrame = {
+      onBad: OnBadBlocks = ErrorOnBadBlocks): DataFrame =
+    decodeGroups(blocks, cols, Nil, onBad)
+
+  /** Point lookup over the encoded table: the same single co-location pass
+    * as `decode`, with the equality pushed into the block-group kernel —
+    * groups whose key block's min/max prefixes or dictionary / FoR /
+    * membership-filter metadata rule the value out are skipped without
+    * decoding a payload; surviving groups decode the key column first and
+    * materialize the other columns for the matching rows only. Equality
+    * semantics, bit-exact.
+    */
+  def decodeWhereEq(
+      blocks: Dataset[EncodedBlock],
+      cols: Seq[String],
+      keyCol: String,
+      value: String): DataFrame = {
+    require(cols.contains(keyCol), s"key column $keyCol not in $cols")
+    decodeGroups(blocks, cols, Seq(GraftPred("eq", keyCol, value)), ErrorOnBadBlocks)
+  }
+
+  private def decodeGroups(blocks: Dataset[EncodedBlock], cols: Seq[String],
+      preds: Seq[GraftPred], onBad: OnBadBlocks): DataFrame = {
     import org.apache.spark.sql.functions.col
     val colNames = cols.toArray
     val strSchema = StructType(colNames.map(c =>
@@ -45,12 +68,9 @@ object Decoder {
     // of a 5-column table and only 1/5th of the bytes move)
     val wanted = blocks.filter(col("colName").isin(colNames.toIndexedSeq: _*))
     // Group co-location via an explicit repartition + within-partition sort
-    // — the exact physical shape groupByKey planned (Exchange + Sort +
-    // streaming group cursor), drained as InternalRows: the old
-    // flatMapGroups emitted an external Row per decoded row and paid the
-    // RowEncoder (ValidateExternalType + UnsafeRow write) plus a
-    // binary→string cast projection on every cell; this path wraps the
-    // decoded bytes as UTF8String directly (no copy, no validation layer).
+    // (Exchange + Sort + streaming group cursor), drained as InternalRows:
+    // the decoded bytes are wrapped as UTF8String directly (no external Row,
+    // no RowEncoder, no binary→string cast projection).
     val spark = blocks.sparkSession
     // canonical column order + types BEFORE the positional InternalRow
     // reads below: a block table read back from a store has partId moved
@@ -70,6 +90,7 @@ object Decoder {
       // streaming group cursor: rows arrive sorted by (partId, blockIdx);
       // hold one group's blocks at a time (same memory shape as the old
       // MapGroups). Field offsets follow the EncodedBlock product schema.
+      val kernel = new BlockGroupDecoder(colNames, preds)
       new Iterator[org.apache.spark.sql.catalyst.InternalRow] {
         private var pending: Iterator[org.apache.spark.sql.catalyst.InternalRow] =
           Iterator.empty
@@ -113,51 +134,26 @@ object Decoder {
             byCol(nextBlock.colName) = nextBlock
             nextBlock = readBlock()
           }
-          val decodedOrErr: Either[Throwable, Array[Array[Array[Byte]]]] =
-            try Right {
-              val d = colNames.map(c => BlockCodec.decodeBlock(byCol.getOrElse(c,
-                throw new IllegalStateException(
-                  s"missing column block '$c' (have ${byCol.keys.mkString(",")})"))))
-              // a group whose columns decode to DIFFERENT row counts is
-              // corrupt: zipping by the first column's length would silently
-              // drop rows — detect it here so it routes through the policy
-              var c = 1
-              while (c < d.length) {
-                if (d(c).length != d(0).length)
-                  throw new IllegalStateException(
-                    s"column '${colNames(c)}' decoded ${d(c).length} rows but " +
-                      s"'${colNames(0)}' decoded ${d(0).length} — corrupt group")
+          val matched =
+            try kernel.decode(byCol, partId, blockIdx)
+            catch {
+              case e: BlockGroupDecoder.UndecodableGroupException if onBad != ErrorOnBadBlocks =>
+                if (onBad == WarnBadBlocks) System.err.println(s"[graft] skipping ${e.getMessage}")
+                null
+            }
+          if (matched != null)
+            pending = matched.rows.iterator.map { i =>
+              val vals = new Array[Any](colNames.length)
+              var c = 0
+              while (c < colNames.length) {
+                val b = matched.values(c)(i)
+                vals(c) =
+                  if (b == null) null
+                  else org.apache.spark.unsafe.types.UTF8String.fromBytes(b)
                 c += 1
               }
-              d
+              new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
             }
-            catch { case e: Throwable => Left(e) }
-          decodedOrErr match {
-            case Left(e) =>
-              onBad match {
-                case ErrorOnBadBlocks =>
-                  throw new IllegalStateException(
-                    s"undecodable block group (partId=$partId, blockIdx=$blockIdx): ${e.getMessage}", e)
-                case SkipBadBlocks =>
-                case WarnBadBlocks =>
-                  System.err.println(
-                    s"[graft] skipping undecodable block group (partId=$partId, blockIdx=$blockIdx): ${e.getMessage}")
-              }
-            case Right(decoded) =>
-              val n = decoded(0).length
-              pending = (0 until n).iterator.map { i =>
-                val vals = new Array[Any](colNames.length)
-                var c = 0
-                while (c < colNames.length) {
-                  val b = decoded(c)(i)
-                  vals(c) =
-                    if (b == null) null
-                    else org.apache.spark.unsafe.types.UTF8String.fromBytes(b)
-                  c += 1
-                }
-                new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-              }
-          }
         }
 
         override def hasNext: Boolean = {
@@ -173,106 +169,5 @@ object Decoder {
       }
     }
     org.apache.spark.sql.GraftBridge.internalCreateDataFrame(spark, rowRdd, strSchema)
-  }
-
-  /** Late-materialized point lookup over the encoded table:
-    *
-    *   1. block skipping at the SCAN — the minPrefix/maxPrefix predicate is
-    *      an ordinary pushable filter, so Parquet row-group stats prune
-    *      blocks before any bytes are read;
-    *   2. dictionary/FoR metadata check (`BlockCodec.mayContain`) skips
-    *      surviving key blocks without decoding payloads;
-    *   3. only the key column of surviving blocks decodes to find match
-    *      row indices; the other columns decode only for blocks with hits,
-    *      and only matching rows materialize.
-    *
-    * The scale analog of Parquet predicate pushdown, applied to our block
-    * format. Equality semantics, bit-exact.
-    */
-  def decodeWhereEq(
-      blocks: Dataset[EncodedBlock],
-      cols: Seq[String],
-      keyCol: String,
-      value: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val colNames = cols.toArray
-    val keyIdx = colNames.indexOf(keyCol)
-    require(keyIdx >= 0, s"key column $keyCol not in $cols")
-    val valBytes = value.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-
-    val spark = blocks.sparkSession
-    import spark.implicits._
-
-    // (1) pushable lower-bound predicate on the key column's blocks. Only
-    // the minPrefix leg is a sound direct comparison (minPrefix ≤ min ≤
-    // any match in unsigned-lex, so minPrefix > value proves absence); the
-    // maxPrefix leg needs the value TRUNCATED to the stored prefix's
-    // length first — prefixes can cut at 23 OR 24 chars (surrogate-pair
-    // safety), and comparing differently-cut prefixes directly can prune
-    // a block that holds the match. That leg runs row-wise below, same
-    // rule as graft.datasource.GraftPruning.lowerMayMatch.
-    val keyBlocks = blocks
-      .filter(col("colName") === keyCol &&
-        col("minPrefix").isNotNull &&
-        col("minPrefix") <= lit(value))
-
-    // (2) + (3a): sound max-prefix check + metadata check, then decode
-    // just the key column
-    val hits = keyBlocks.flatMap { b =>
-      val vk = if (b.maxPrefix != null && value.length > b.maxPrefix.length)
-        value.substring(0, b.maxPrefix.length) else value
-      if (b.maxPrefix != null && java.util.Arrays.compareUnsigned(
-          vk.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          b.maxPrefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)) > 0)
-        Iterator.empty
-      else if (!BlockCodec.mayContain(b, valBytes)) Iterator.empty
-      else {
-        val decoded = BlockCodec.decodeBlock(b)
-        val idx = scala.collection.mutable.ArrayBuffer.empty[Int]
-        var i = 0
-        while (i < decoded.length) {
-          if (decoded(i) != null && java.util.Arrays.equals(decoded(i), valBytes)) idx += i
-          i += 1
-        }
-        if (idx.isEmpty) Iterator.empty
-        else Iterator.single((b.partId, b.blockIdx, idx.toArray))
-      }
-    }.toDF("partId", "blockIdx", "rowIdx")
-
-    // (3b): full decode only for blocks with hits, materializing hit rows
-    val binSchema = StructType(colNames.map(c => StructField(c, BinaryType, nullable = true)))
-    val keyEnc = Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt)
-    // no broadcast hint: `hits` carries an int array of every matching row
-    // index per surviving block — tiny for selective keys, but a low-
-    // selectivity key (40%+ of rows) would ship billions of indices to every
-    // executor if forced. Size-based planning / AQE picks broadcast when the
-    // hit set is actually small and a shuffled join otherwise.
-    // Column pruning BEFORE the join: blocks of unrequested columns must
-    // not ship their payloads through the shuffle (same filter decode()
-    // applies before its groupByKey).
-    val joined = blocks
-      .filter(col("colName").isin(colNames.toIndexedSeq: _*))
-      .join(hits, Seq("partId", "blockIdx"))
-    val binary = joined
-      .groupByKey(r => (r.getAs[Int]("partId"), r.getAs[Int]("blockIdx")))(keyEnc)
-      .flatMapGroups { (_, it) =>
-        val rows = it.toArray
-        val idx = rows.head.getAs[scala.collection.Seq[Int]]("rowIdx").toArray
-        val byCol = rows.map(r => r.getAs[String]("colName") -> r).toMap
-        val decoded = colNames.map { c =>
-          val r = byCol(c)
-          BlockCodec.decodeBlock(EncodedBlock(
-            c, r.getAs[Int]("partId"), r.getAs[Int]("blockIdx"),
-            r.getAs[Byte]("codecId"), r.getAs[Byte]("wrapId"),
-            r.getAs[Int]("rowCount"), r.getAs[Long]("rawBytes"),
-            r.getAs[Long]("encodedBytes"), r.getAs[String]("minPrefix"),
-            r.getAs[String]("maxPrefix"), r.getAs[Array[Byte]]("data")))
-        }
-        idx.iterator.map { i =>
-          Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(
-            decoded.map(d => d(i): Any)))
-        }
-      }(Encoders.row(binSchema))
-    binary.select(colNames.map(c => col(c).cast("string").as(c)): _*)
   }
 }

@@ -132,10 +132,7 @@ object Encoder {
     * Dataset.mapPartitions: the external-Row deserializer layer
     * (DeserializeToObject + GenericRow per row) is pure overhead for a
     * loop that only reads binary cells (EncodeBreakdown's `rowconv` delta
-    * measures this layer). A side benefit: the block RDD is a single shared
-    * lineage, so a plan that consumes the blocks twice (e.g.
-    * decodeWhereEq's key pass + hit join) reuses one co-location shuffle
-    * instead of re-planning it per subtree.
+    * measures this layer).
     */
   def encodePartitioned(
       partitioned: DataFrame,

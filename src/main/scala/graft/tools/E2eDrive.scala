@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 
 /** End-to-end drive of the engine through its public API: synthesize the
   * source-code table → resumable encode to disk → read blocks back →
-  * decode → verify per-row sha256 bit-identity + report codec/size metrics;
+  * decode (Decoder.decode and the DSv2 reader) → verify per-row sha256
+  * bit-identity + report codec/size metrics;
   * then encode again into the same outDir, which must resume every
   * partition (skipped == completed, same totals) and still decode
   * bit-identically.
@@ -43,15 +44,23 @@ object E2eDrive {
       res
     }
 
-    /** decode the store on disk and compare per-row sha256 multisets */
+    /** decode the store on disk through both entry points — Decoder.decode
+      * over its block table and the DSv2 reader — and compare per-row
+      * sha256 multisets
+      */
     def roundTrips(label: String): Boolean = {
       val blocks = spark.read.parquet(Checkpoint.blocksDir(outDir))
         .as(Encoders.product[EncodedBlock])
-      val decoded = Decoder.decode(blocks, cols)
-      val mismatches = graft.verify.Sha256Check.mismatchGroups(df, decoded, cols)
-      val nDecoded = decoded.count()
-      println(s"[e2e] $label decoded rows=$nDecoded expected=$rows sha-mismatch-groups=$mismatches")
-      val ok = nDecoded == rows && mismatches == 0
+      val ok = Seq(
+        "Decoder.decode" -> Decoder.decode(blocks, cols),
+        "format(graft)" -> spark.read.format("graft").load(outDir).select(cols.map(col): _*)
+      ).map { case (path, decoded) =>
+        val mismatches = graft.verify.Sha256Check.mismatchGroups(df, decoded, cols)
+        val nDecoded = decoded.count()
+        println(s"[e2e] $label $path decoded rows=$nDecoded expected=$rows " +
+          s"sha-mismatch-groups=$mismatches")
+        nDecoded == rows && mismatches == 0
+      }.forall(identity)
       if (ok) println(s"[e2e] PASS: bit-identical round-trip ($label)")
       ok
     }

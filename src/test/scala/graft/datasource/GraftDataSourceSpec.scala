@@ -141,7 +141,7 @@ class GraftDataSourceSpec extends AnyFunSuite {
     val df = spark.read.format("graft").load(store)
     val counted = df.agg(count(lit(1)))
     val plan = counted.queryExecution.executedPlan.toString
-    assert(plan.contains("GraftCountStarScan"), plan.take(800))
+    assert(plan.contains("PushedAggregates: [count(*)]"), plan.take(800))
     assert(counted.head().getLong(0) == 4000)
     // pushdown must NOT fire when a filter is present (filters are residual)
     val filtered = df.where(col("lang") === "en").agg(count(lit(1)))
